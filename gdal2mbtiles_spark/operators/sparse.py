@@ -7,16 +7,23 @@ whole pyramid can be derived relationally on a sparse pixel relation
 
     pixels(z, gx, gy, r, g, b, a)     -- global pixel coords, y-down
 
-with one pure-JVM aggregation per level:
+where one level down is
 
     parent(gx>>1, gy>>1).channel = (sum(children channel) + 2) >> 2
 
 (missing children contribute 0 = transparent, exactly the
-tms_align-embed semantics).  256x256 buffers are materialized only
-ONCE per level, in a fused kernel that paints, MD5-hashes, and
-PNG-encodes in a single pass — so tile payloads never cross an
-exchange at all: the only shuffles in the whole pyramid carry ~40-byte
-sparse pixel rows.
+tms_align-embed semantics).
+
+One kernel, ``_phase_kernel``, paints, MD5-hashes and PNG-encodes
+every tile: it renders a band of levels [top..bottom] in one pass,
+shrinking the sparse rows in-task between levels.  The distributed
+phase passes run it under ``mapInPandas``; the pyramid apex (levels
+<= ``_DRIVER_APEX``) runs the same closure in-process on the driver.
+256x256 buffers exist only inside the kernel, so tile payloads never
+cross an exchange while rendering: the phase shuffles carry ~40-byte
+sparse pixel rows.  The canonical payload per hash is chosen by
+``pyramid.canonical_images``, the helper the buffer pipeline's
+``dedup_tiles`` shares.
 
 Equivalence to the generic buffer pipeline (operators.pyramid) is
 asserted in tests: identical tile ids and payloads level by level.
@@ -40,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import signed_low64
 from ..grid import TILE_SIDE
+from .pyramid import canonical_images
 
 _PROF = os.environ.get("SPARK_GRAFT_PROFILE")
 
@@ -58,8 +66,6 @@ def _prof(tag: str, t0: float) -> float:
                 fh.write(line + "\n")
     return t1
 
-
-PIXEL_SCHEMA = "z int, gx bigint, gy bigint, r int, g int, b int, a int"
 
 # --- md5 zero-prefix states (round 6) ---------------------------------------
 # The A1 contract hashes the FULL 256 KB canvas per unique tile, and the
@@ -89,10 +95,6 @@ def _md5_sparse(raw, first_row: int):
     h.update(raw[first_row * _ROW_BYTES:])
     return h
 
-# canon broadcast cap: 128 MB of ~64 B rows (2M distinct images) is
-# cheap to torrent-broadcast and keeps tile payloads exchange-free;
-# beyond it the min_by single-shuffle fallback is the scale plan
-_CANON_BC_CAP = 128 * 1024 * 1024
 
 # Arrow input batch for PIXEL kernels: the session default (256 rows,
 # sized for 262KB tile buffers) hands a pixel kernel ~10KB frames —
@@ -146,155 +148,6 @@ def heat_pixels(hist: DataFrame, z: int) -> DataFrame:
         gx.cast("long").alias("gx"), gy.cast("long").alias("gy"),
         F.lit(255).alias("r"), F.lit(255).alias("g"),
         F.lit(255).alias("b"), alpha.alias("a"))
-
-
-def downsample_pixels(pixels: DataFrame) -> DataFrame:
-    """One level down: 2x2 box on the sparse relation (pure JVM)."""
-    return (pixels
-            .groupBy((F.col("gx") / 2).cast("long").alias("gx"),
-                     (F.col("gy") / 2).cast("long").alias("gy"))
-            .agg(((F.sum("r") + 2) / 4).cast("int").alias("r"),
-                 ((F.sum("g") + 2) / 4).cast("int").alias("g"),
-                 ((F.sum("b") + 2) / 4).cast("int").alias("b"),
-                 ((F.sum("a") + 2) / 4).cast("int").alias("a")))
-
-
-def sparse_levels(hist: DataFrame, z: int,
-                  min_resolution: int = 0,
-                  buffer: str = "native") -> Dict[int, DataFrame]:
-    """{level: sparse pixels} from native z down to min_resolution.
-    Shuffle volume decays 4x per level; rows are ~40 bytes.
-
-    buffer:
-      'native' (default) — eagerly checkpoint only the native pixels
-        (the expensive upstream: pages synth + histogram); deeper
-        levels re-derive through cheap decaying JVM aggs per consumer,
-        avoiding one fixed checkpoint job per level;
-      'all' — eagerly checkpoint every level (best when many separate
-        actions consume mid levels);
-      'none' — no materialization (caller manages persistence).
-    """
-    native = heat_pixels(hist, z)
-    if buffer in ("native", "all"):
-        native = native.localCheckpoint(eager=True)
-    levels = {z: native}
-    cur = native
-    for r in range(z - 1, min_resolution - 1, -1):
-        cur = downsample_pixels(cur).withColumn(
-            "z", F.lit(r).cast("int")).select(
-            "z", "gx", "gy", "r", "g", "b", "a")
-        if buffer == "all":
-            cur = cur.localCheckpoint(eager=True)
-        levels[r] = cur
-    return levels
-
-
-def render_sparse_level(pixels: DataFrame, z: int, renderer,
-                        parallelism: Optional[int] = None,
-                        out_chunk: int = 1024) -> DataFrame:
-    """Fused paint+hash+encode: sparse pixels -> rendered tiles.
-
-    Output: (z, x(TMS), y(TMS), tile_id, tile_hex, tile_data=encoded).
-    The canvas exists only inside the kernel; the MD5 is of the RAW
-    RGBA buffer (A1 contract) and tile_data is the encoded payload.
-
-    One hash repartition co-locates each tile's pixels, then a
-    partition-level ``mapInPandas`` groups tiles with one numpy
-    lexsort — NOT groupBy.applyInPandas, whose per-group pandas
-    DataFrame construction dominates when most groups are a handful
-    of rows (measured ~2 ms/tile of pure overhead on 340k tiles).
-    Per-task memory is bounded by the partition's SPARSE row count
-    (~40 bytes/row), never by materialized canvases: painted tiles
-    stream out in ``out_chunk``-row batches."""
-    n = 1 << z
-    keyed = pixels.withColumn("_tx", (F.col("gx") / TILE_SIDE)
-                              .cast("long")) \
-                  .withColumn("_ty", (F.col("gy") / TILE_SIDE)
-                              .cast("long"))
-    sc = pixels.sparkSession.sparkContext
-    p = parallelism or sc.defaultParallelism
-    keyed = keyed.repartition(p, "_tx", "_ty")
-
-    def paint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = (parts[0] if len(parts) == 1
-               else pd.concat(parts, ignore_index=True))
-        tx = pdf["_tx"].to_numpy(np.int64)
-        ty = pdf["_ty"].to_numpy(np.int64)
-        gx = pdf["gx"].to_numpy(np.int64)
-        gy = pdf["gy"].to_numpy(np.int64)
-        ch = [pdf[c].to_numpy().astype(np.uint8)
-              for c in ("r", "g", "b", "a")]
-        lx_all = (gx & 255).astype(np.uint8)
-        ly_all = (gy & 255).astype(np.uint8)
-        # (ly, lx) in the sort canonicalizes within-tile pixel order
-        # for the content-addressed cache (same scheme as the phase
-        # kernel; PLANS.md §9)
-        order = np.lexsort((lx_all, ly_all, ty, tx))
-        key = tx[order] * (np.int64(1) << 32) + ty[order]
-        _, starts = np.unique(key, return_index=True)
-        bounds = np.append(starts, len(key))
-
-        o_x: list = []
-        o_y: list = []
-        o_id: list = []
-        o_hex: list = []
-        o_data: list = []
-
-        def flush():
-            chunk = pd.DataFrame({
-                "z": np.full(len(o_x), z, dtype=np.int32),
-                "x": np.asarray(o_x, dtype=np.int64),
-                "y": np.asarray(o_y, dtype=np.int64),
-                "tile_id": np.asarray(o_id, dtype=np.int64),
-                "tile_hex": list(o_hex),
-                "tile_data": list(o_data)})
-            for lst in (o_x, o_y, o_id, o_hex, o_data):
-                lst.clear()
-            return chunk
-
-        canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-        cache: Dict[bytes, Tuple[int, str, bytes]] = {}
-        for i in range(len(starts)):
-            s, e = starts[i], bounds[i + 1]
-            idx = order[s:e]
-            t_x, t_y = int(tx[idx[0]]), int(ty[idx[0]])
-            lx = lx_all[idx]
-            ly = ly_all[idx]
-            ck = (lx.tobytes() + ly.tobytes()
-                  + b"".join(c[idx].tobytes() for c in ch))
-            hit = cache.get(ck)
-            if hit is None:
-                for c in range(4):
-                    canvas[ly, lx, c] = ch[c][idx]
-                # zero-copy flat view: md5 + encode read the canvas in
-                # place — canvas.tobytes() cost a 512 KB copy (read +
-                # write) per unique tile, pure memory traffic on the
-                # substrate-bandwidth-bound wide legs (PLANS.md §9/10)
-                raw = canvas.reshape(-1).data
-                # ly is (ly, lx)-sorted: resume md5 from the cached
-                # zero-prefix state; pass ly (dups allowed) as the
-                # lit hint — see pyramid_phase_rendered's kernel
-                hx = _md5_sparse(raw, int(ly[0])).hexdigest()
-                hit = (signed_low64(int(hx, 16)), hx,
-                       renderer.render(raw, lit_hint=ly))
-                canvas[ly, lx] = 0          # clear only lit pixels
-                if len(cache) >= 200_000:
-                    cache.clear()
-                cache[ck] = hit
-            o_x.append(t_x)
-            o_y.append(n - 1 - t_y)                  # TMS flip
-            o_id.append(hit[0])
-            o_hex.append(hit[1])
-            o_data.append(hit[2])
-            if len(o_x) >= out_chunk:
-                yield flush()
-        if o_x:
-            yield flush()
-
-    return keyed.mapInPandas(paint, schema=RENDERED_SCHEMA)
 
 
 # phased-kernel output: rendered tile rows (kind=0) union next-phase
@@ -356,9 +209,9 @@ def _pixel_chunk(gx: np.ndarray, gy: np.ndarray, ch) -> pd.DataFrame:
 
 def _shrink_sparse(gx, gy, ch):
     """One 2x2 box level on sparse arrays: group by (gx>>1, gy>>1),
-    per-channel (sum + 2) >> 2 — the numpy twin of downsample_pixels
-    (missing children contribute 0), bit-identical to the canvas
-    shrink because box blocks never cross tile boundaries."""
+    per-channel (sum + 2) >> 2 (missing children contribute 0),
+    bit-identical to the buffer pipeline's canvas shrink because box
+    blocks never cross tile boundaries."""
     key = (gx >> 1) * _KEY_SHIFT + (gy >> 1)
     order = np.argsort(key, kind="stable")
     key = key[order]
@@ -385,7 +238,6 @@ def pyramid_phase_rendered(pixels: DataFrame, top: int, bottom: int,
     chain's serial Catalyst/scheduling cost dominated the 4-vs-16-core
     scaling gap).  With emit_pixels the kernel also outputs the
     level-(bottom-1) sparse rows that seed the next phase."""
-    n_top = 1 << top
     shift = 8 + (top - bottom)          # log2(TILE_SIDE) + level gap
     keyed = pixels.select(
         "gx", "gy", "r", "g", "b", "a",
@@ -414,8 +266,12 @@ def pyramid_phase_rendered(pixels: DataFrame, top: int, bottom: int,
 
 def _phase_kernel(top: int, bottom: int, renderer, emit_pixels: bool,
                   out_chunk: int = 1024):
-    """Build the multi-level paint+hash+encode kernel closure (module
-    level so BENCH/profile_kernel.py profiles the REAL kernel)."""
+    """Build the multi-level paint+hash+encode kernel closure: the only
+    code that renders sparse tiles.  It maps an iterator of pixel
+    frames (gx, gy, r, g, b, a at level ``top``) to PHASE_SCHEMA
+    frames, so it runs both under ``mapInPandas`` and in-process on
+    the driver apex (module level so BENCH/profile_kernel.py profiles
+    the REAL kernel)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [b for b in batches if len(b)]
@@ -505,112 +361,72 @@ def _phase_kernel(top: int, bottom: int, renderer, emit_pixels: bool,
     return kernel
 
 
+# pyramid levels <= this render on the driver: a level-L sparse
+# relation has at most (256*2^L)^2 rows whatever the input size
+# (<= 1.05M rows, ~40 MB at L=2), so collecting it is O(1) in data
+# scale, while rendering those levels distributed is all fixed
+# overhead (tiny exchanges, python-worker round trips) and no work
+_DRIVER_APEX = 2
+
+_RENDERED_COLS = ["z", "x", "y", "tile_id", "tile_hex", "tile_data"]
+
+
 def _render_apex_driver(spark: SparkSession, pixels: DataFrame,
                         top: int, bottom: int, renderer) -> DataFrame:
-    """Render pyramid levels [top..bottom] locally on the driver.
-
-    Only called for top <= 2, where the sparse relation is bounded by
-    (256*2^top)^2 rows whatever the input size — the distributed
-    version of these levels is all fixed overhead (tiny exchanges,
-    python-worker round trips) and no work."""
+    """Render pyramid levels [top..bottom] (top <= _DRIVER_APEX) on the
+    driver: one collect, then the phase kernel in-process."""
     pdf = pixels.select("gx", "gy", "r", "g", "b", "a").toPandas()
-    gx = pdf["gx"].to_numpy(np.int64)
-    gy = pdf["gy"].to_numpy(np.int64)
-    ch = [pdf[c].to_numpy().astype(np.int64)
-          for c in ("r", "g", "b", "a")]
-    rows = []
-    canvas = np.zeros((TILE_SIDE, TILE_SIDE, 4), dtype=np.uint8)
-    for lvl in range(top, bottom - 1, -1):
-        n = 1 << lvl
-        tx_all, ty_all = gx >> 8, gy >> 8
-        order = np.lexsort((ty_all, tx_all))
-        key = tx_all[order] * (np.int64(1) << 32) + ty_all[order]
-        _, starts = np.unique(key, return_index=True)
-        bounds = np.append(starts, len(key))
-        for i in range(len(starts)):
-            idx = order[starts[i]:bounds[i + 1]]
-            t_x, t_y = int(tx_all[idx[0]]), int(ty_all[idx[0]])
-            lx = gx[idx] - (t_x << 8)
-            ly = gy[idx] - (t_y << 8)
-            canvas[:] = 0
-            for c in range(4):
-                canvas[ly, lx, c] = ch[c][idx].astype(np.uint8)
-            raw = canvas.reshape(-1).data           # zero-copy view
-            hx = hashlib.md5(raw).hexdigest()
-            rows.append((lvl, t_x, n - 1 - t_y,
-                         signed_low64(int(hx, 16)), hx,
-                         bytes(renderer.render(
-                             raw, lit_hint=np.unique(ly)))))
-        if lvl > bottom:
-            gx, gy, ch = _shrink_sparse(gx, gy, ch)
+    kernel = _phase_kernel(top, bottom, renderer, emit_pixels=False)
+    chunks = list(kernel(iter([pdf])))
+    apex = (pd.concat(chunks, ignore_index=True) if chunks
+            else _tile_chunk([], [], [], [], [], []))
     # Arrow path (round 6): createDataFrame(list) plans a Python RDD
     # whose evaluation launches one pickle-deserializing Python worker
     # per default-parallelism slice — measured 32 near-idle tasks /
-    # ~1.7 s of wall for ~21 apex rows, surfacing inside whatever job
-    # first materializes the lazy apex union (the canon build).  A
-    # pandas frame with exact dtypes goes through Arrow: the driver
-    # serializes one record batch and the scan is a single JVM task.
-    apex_pdf = pd.DataFrame({
-        "z": np.array([r[0] for r in rows], dtype=np.int32),
-        "x": np.array([r[1] for r in rows], dtype=np.int64),
-        "y": np.array([r[2] for r in rows], dtype=np.int64),
-        "tile_id": np.array([r[3] for r in rows], dtype=np.int64),
-        "tile_hex": [r[4] for r in rows],
-        "tile_data": [r[5] for r in rows]})
-    return spark.createDataFrame(apex_pdf, schema=RENDERED_SCHEMA)
+    # ~1.7 s of wall for ~21 apex rows.  A pandas frame with exact
+    # dtypes goes through Arrow: the driver serializes one record
+    # batch and the scan is a single JVM task.
+    return spark.createDataFrame(apex[_RENDERED_COLS],
+                                 schema=RENDERED_SCHEMA)
 
 
 def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                             z: int, renderer,
                             min_resolution: int = 0,
                             phase_depth: int = 5,
-                            apex_level: int = 3,
                             broadcast_canon: Optional[bool] = None
                             ) -> Tuple[DataFrame, DataFrame]:
     """Full fused pipeline: histogram -> phased multi-level kernels ->
-    per-level apex -> (images, map).
+    driver apex -> (images, map).
 
-    Levels above ``apex_level`` render in ceil(levels/phase_depth)
+    Levels above ``_DRIVER_APEX`` render in ceil(levels/phase_depth)
     multi-level kernel passes (one shuffle + one plan per pass instead
     of per level — the per-level chain's serial Catalyst/scheduling
     cost dominated 4-vs-16-core scaling).  A pass keyed by its bottom
-    ancestor has 4^bottom groups; apex_level=3 keeps every pass at
-    >= 4^3 = 64 keys.  64 tasks is a parallelism floor, but the
-    levels below the last big pass hold a vanishing fraction of the
-    pixel relation (<= grid size, decaying 4x per level), so the
-    floor costs wall-time only on clusters far wider than the work
-    itself — while each fused pass replaces two render stages plus a
-    downsample shuffle of round 2's per-level apex chain (measured
-    ~15 s of small-stage scheduling at 16 cores, pure serial cost).
+    ancestor has 4^bottom groups, so stopping the passes at level
+    _DRIVER_APEX + 1 = 3 keeps every pass at >= 64 keys.  Each pass
+    is eagerly checkpointed once: that one materialization feeds the
+    rendered union and the next pass's seed pixels.
 
-    The pyramid apex below ``driver_apex`` is finished ON THE DRIVER:
-    a level-L sparse relation has at most (256*2^L)^2 rows regardless
-    of input size (<= 1.05M at L=2, ~40 MB), so collecting it is O(1)
-    in data scale, and the local numpy render replaces ~6 tiny
-    stages' worth of fixed scheduling/exchange overhead — serial cost
-    that capped N-vs-4N scaling efficiency.
+    The levels <= _DRIVER_APEX are finished ON THE DRIVER by the same
+    kernel (see _render_apex_driver), seeded by the last pass's
+    emitted pixels.
 
     images: (tile_id, tile_data encoded, tile_hex), canonical row =
-    min (z, x, y) per hash (same order-free first-wins as
-    pyramid.dedup_tiles); map: (zoom_level, tile_column, tile_row,
+    min (z, x, y) per hash, chosen by pyramid.canonical_images (the
+    helper dedup_tiles shares) with the (z, x, y) key packed into one
+    BIGINT when z <= 29; map: (zoom_level, tile_column, tile_row,
     tile_id).  Dup tiles cost one wasted encode each — the trade for
     never shuffling payloads; use the buffer pipeline when the dup
     ratio is high (constant oceans etc.).
 
-    broadcast_canon=None (default) mirrors dedup_tiles' estimate-then-
-    choose: a narrow distinct-id count (over already-checkpointed
-    blocks — cheap) sizes the canon relation against
-    spark.sql.autoBroadcastJoinThreshold; the payload-shuffle-free
-    broadcast plan is used only when canon fits, otherwise a min_by
-    aggregate (payloads shuffle once, but nothing is collected to the
-    driver — the plan that survives a 100x distinct-image count).
-    Pass True/False to force a path and skip the counting pass."""
+    broadcast_canon=None (default) lets canonical_images pick: it
+    checkpoints the narrow canon relation and broadcasts it while it
+    fits the 128 MB canon cap, otherwise it takes the min_by aggregate
+    (payloads shuffle once, nothing is collected to the driver).  Pass
+    True/False to force a path."""
     pixels = heat_pixels(hist, z)
-    apex_top = min(max(apex_level - 1, min_resolution - 1), z)
-    if z <= apex_top:
-        # no phased passes: the per-level apex chain fans multiple
-        # consumers off the native relation — materialize it once
-        pixels = pixels.localCheckpoint(eager=True)
+    apex_top = min(max(_DRIVER_APEX, min_resolution - 1), z)
     rendered_parts = []
     top = z
     t_prof = time.time()
@@ -621,7 +437,7 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
         out = pyramid_phase_rendered(pixels, top, bottom, renderer,
                                      emit_pixels=emit)
         # one materialization feeds the rendered union and (when
-        # pixels are emitted) the next pass/apex seed.  The final
+        # pixels are emitted) the next pass/driver apex.  The final
         # phase (emit=False, bottom == min_resolution) needs it just
         # as much: un-checkpointed, the fused paint+hash+encode
         # kernel re-executes for every downstream consumer (canon
@@ -634,48 +450,13 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
                 F.lit(bottom - 1).cast("int").alias("z"),
                 "gx", "gy", "r", "g", "b", "a")
         rendered_parts.append(out.where(F.col("kind") == 0).select(
-            "z", "x", "y", "tile_id", "tile_hex", "tile_data"))
+            *_RENDERED_COLS))
         top = bottom - 1
 
-    # materialize the apex seed as NARROW pixel rows once: the phase
-    # checkpoint carries the fat tile_data column, and each per-level
-    # branch below would rescan it otherwise.  When min_resolution
-    # cuts the pyramid above the apex (top < min_resolution) no apex
-    # level renders — skip the seed, which would be a full
-    # materialization job whose result nothing reads.  Likewise when
-    # NO distributed apex level remains (top <= driver_apex): the
-    # driver apex's toPandas is then the seed's only consumer, so the
-    # checkpoint is a pure extra materialization job — let toPandas
-    # scan the phase-checkpoint filter directly (round 6, ~0.3-0.5 s).
-    driver_apex = 2          # <= (256*2^2)^2 = 1.05M rows, any scale
-    if (top >= min_resolution and top != z
-            and top > driver_apex):
-        cur = pixels.localCheckpoint(eager=True)
-    else:
-        cur = pixels
-    t_prof = _prof("apex_seed_ckpt", t_prof)
-    apex_parts = []
-    lvl = top
-    while lvl >= min_resolution and lvl > driver_apex:
-        apex_parts.append(render_sparse_level(cur, lvl, renderer))
-        if lvl > min_resolution:
-            cur = downsample_pixels(cur)
-        lvl -= 1
-    if lvl >= min_resolution:
-        apex_parts.append(_render_apex_driver(
-            spark, cur, lvl, min_resolution, renderer))
-    if apex_parts:
-        # the phased parts above are filters over eager checkpoints —
-        # rescanning them per consumer is cheap block reads; only the
-        # apex renders are fresh compute, so checkpoint just their
-        # small union instead of duplicating the full rendered
-        # relation's blocks (the old full-union checkpoint re-wrote
-        # ~1.2 GB of already-checkpointed tiles at z10)
-        apex = apex_parts[0]
-        for part in apex_parts[1:]:
-            apex = apex.unionByName(part)
-        rendered_parts.append(apex.localCheckpoint(eager=False))
-    t_prof = _prof("apex_parts_built", t_prof)
+    if top >= min_resolution:
+        rendered_parts.append(_render_apex_driver(
+            spark, pixels, top, min_resolution, renderer))
+        t_prof = _prof(f"driver_apex[{top}..{min_resolution}]", t_prof)
 
     rendered = rendered_parts[0]
     for part in rendered_parts[1:]:
@@ -685,64 +466,7 @@ def sparse_pyramid_rendered(spark: SparkSession, hist: DataFrame,
         F.col("z").alias("zoom_level"),
         F.col("x").alias("tile_column"),
         F.col("y").alias("tile_row"), "tile_id")
-
-    canon = None
-    # canonical key: min (z, x, y) per hash.  For any slippy pyramid
-    # z <= 29 and x, y < 2^z <= 2^29, so the triple packs losslessly
-    # into one BIGINT with z in the high bits — min(packed) selects
-    # the exact same lexicographic-min row as min(struct(z, x, y)),
-    # but the agg runs as a HashAggregate on a primitive long instead
-    # of a SortAggregate on a struct buffer (round 6: the struct min
-    # forced a sort of the full tiles relation on both sides of the
-    # canon exchange — measured canon_build 6.2 -> ~2 s at z10).
-    use_packed = z <= 29
-    _pk = (F.col("z").cast("long") * F.lit(np.int64(1) << 58)
-           + F.col("x") * F.lit(np.int64(1) << 29) + F.col("y"))
-    if broadcast_canon is None or broadcast_canon:
-        # the canonical-owner relation, built NARROWLY: only
-        # (tile_id, packed_key) rows (~16 B) cross the agg shuffle,
-        # and the eager checkpoint (a few MB per million distinct
-        # images) both materializes the lazy apex union for every
-        # downstream consumer and makes the broadcast-decision count
-        # free.  Round-5 change (serial-floor work): the decision was
-        # previously a total-row-count UPPER bound, which at z12
-        # (4.42M rows, 1.58M distinct) wrongly forced the min_by
-        # fallback whose ~2 GB payload shuffle cost a measured
-        # ~28 s that does NOT scale with cores (shared-disk bound) —
-        # the second-largest term of the serial floor S.  The exact
-        # distinct count keeps payloads exchange-free well past the
-        # old cutoff; _CANON_BC_CAP bounds the broadcast at 128 MB
-        # (torrent-distributed, tiny rows), and truly huge pyramids
-        # still fall back to the one-shuffle min_by plan.
-        ckey = _pk.alias("_c") if use_packed \
-            else F.struct("z", "x", "y").alias("_c")
-        canon = (rendered.select("tile_id", ckey)
-                 .groupBy("tile_id")
-                 .agg(F.min("_c").alias("_c"))
-                 .select(F.col("tile_id").alias("_ctid"), "_c")
-                 .localCheckpoint(eager=True))
-        t_prof = _prof("canon_build_ckpt", t_prof)
-    if broadcast_canon is None:
-        from .pyramid import _CANON_ROW_BYTES
-        n_canon = canon.count()
-        t_prof = _prof("canon_count", t_prof)
-        broadcast_canon = (n_canon * _CANON_ROW_BYTES
-                           < _CANON_BC_CAP)
-
-    if broadcast_canon:
-        jkey = _pk if use_packed else F.struct("z", "x", "y")
-        images = (rendered.join(
-            F.broadcast(canon),
-            (F.col("tile_id") == F.col("_ctid"))
-            & (jkey == F.col("_c")), "inner")
-            .select("tile_id", "tile_data", "tile_hex"))
-    else:
-        # distinct-image relation too big even for _CANON_BC_CAP:
-        # pick the canonical payload in ONE hash aggregate.  Payloads
-        # (already encoded, ~KB) cross an exchange once; no driver
-        # collect, no broadcast — bounded at any distinct-image count.
-        images = (rendered.groupBy("tile_id")
-                  .agg(F.min_by("tile_data", F.struct("z", "x", "y"))
-                       .alias("tile_data"),
-                       F.min("tile_hex").alias("tile_hex")))
+    images = canonical_images(rendered, "tile_data", packed=z <= 29,
+                              broadcast_canon=broadcast_canon)
+    _prof("canonical_images", t_prof)
     return images, map_df

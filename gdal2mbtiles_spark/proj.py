@@ -444,10 +444,6 @@ def is_lcc_epsg(epsg: int) -> bool:
     return epsg in _LCC_EPSG
 
 
-def is_polar_epsg(epsg: int) -> bool:
-    return epsg in _POLAR_EPSG
-
-
 def is_supported_epsg(epsg: int) -> bool:
     return (is_utm_epsg(epsg) or is_lcc_epsg(epsg)
             or epsg in _POLAR_EPSG or epsg in _ALBERS_EPSG

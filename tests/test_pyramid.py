@@ -14,6 +14,7 @@ from gdal2mbtiles_spark.grid import (RasterMeta, SRS_MERCATOR,
                                      whole_world_raster_meta)
 from gdal2mbtiles_spark.helpers import image_mbtiles, image_slice
 from gdal2mbtiles_spark.mbtiles import MBTilesFile
+from gdal2mbtiles_spark.operators import pyramid
 from gdal2mbtiles_spark.operators.pyramid import (
     ZERO_TILE, border_keys, dedup_tiles, downsample_level, pyramid_tiles,
     union_levels, upsample_level)
@@ -208,23 +209,17 @@ class TestBordersAndDedup:
                 sorted(tuple(r) for r in map_df.collect()))
         assert outs[True] == outs[False] == outs[None]
 
-    def test_dedup_auto_fallback_to_agg(self, spark):
-        # force the fallback by shrinking the broadcast threshold so
-        # even a 16-image canon exceeds it
+    def test_dedup_auto_fallback_to_agg(self, spark, monkeypatch):
+        # force the fallback by shrinking the shared canon broadcast
+        # cap so even a 4-image canon exceeds it
         meta = whole_world_raster_meta(1024, 1024)
         df = native_tiles(spark, meta)
-        key = "spark.sql.autoBroadcastJoinThreshold"
-        old = spark.conf.get(key)
-        try:
-            spark.conf.set(key, "64")   # bytes: 16 images won't fit
-            images, map_df = dedup_tiles(spark, df,
-                                         broadcast_canon=None)
-            assert "min_by" in images._jdf.queryExecution().analyzed(
-                ).toString()
-            # gradient world at z2: B = (tx ^ ty)*16 -> 4 distinct images
-            assert images.count() == 4 and map_df.count() == 16
-        finally:
-            spark.conf.set(key, old)
+        monkeypatch.setattr(pyramid, "_CANON_BC_CAP", 64)
+        images, map_df = dedup_tiles(spark, df, broadcast_canon=None)
+        assert "min_by" in images._jdf.queryExecution().analyzed(
+            ).toString()
+        # gradient world at z2: B = (tx ^ ty)*16 -> 4 distinct images
+        assert images.count() == 4 and map_df.count() == 16
 
     def test_zoom_offset(self, spark):
         # storages.py:277-279: zoom_offset shifts z in map rows

@@ -7,13 +7,14 @@ from pyspark.sql import functions as F
 from gdal2mbtiles_spark.grid import whole_world_raster_meta
 from gdal2mbtiles_spark.operators.burn import (burn_points,
                                                pixel_histogram)
-from gdal2mbtiles_spark.operators.pyramid import (dedup_tiles,
+from gdal2mbtiles_spark.operators import pyramid
+from gdal2mbtiles_spark.operators.pyramid import (canonical_images,
+                                                  dedup_tiles,
                                                   pyramid_tiles,
                                                   render_images,
                                                   union_levels)
-from gdal2mbtiles_spark.operators.sparse import (downsample_pixels,
+from gdal2mbtiles_spark.operators.sparse import (_shrink_sparse,
                                                  heat_pixels,
-                                                 sparse_levels,
                                                  sparse_pyramid_rendered)
 from gdal2mbtiles_spark.renderers import PngRenderer, decode_png_rgba
 from gdal2mbtiles_spark.sources.pages import synth_pages, with_geo
@@ -26,6 +27,11 @@ N = 3000
 def hist(spark):
     pages = with_geo(synth_pages(spark, N), tile_z=Z)
     return pixel_histogram(pages, z=Z).persist()
+
+
+def _rows(df):
+    return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                        else v for v in row) for row in df.collect())
 
 
 def test_sparse_equals_buffer_pipeline(spark, hist):
@@ -56,22 +62,17 @@ def test_sparse_equals_buffer_pipeline(spark, hist):
 
 
 def test_multi_phase_equals_single_phase(spark, hist):
-    # phase_depth=2 forces the emit_pixels bridge (3 kernel passes at
-    # Z=4); results must be identical to one deep pass
-    one = sparse_pyramid_rendered(spark, hist, Z,
+    # at z=6 phase_depth=2 forces the emit_pixels bridge (passes
+    # [6..5], [4..3]); results must be identical to one deep pass
+    # [6..3].  Both finish [2..0] on the driver apex.
+    one = sparse_pyramid_rendered(spark, hist, 6,
                                   PngRenderer(compression=1),
-                                  min_resolution=0, phase_depth=16,
-                                  apex_level=0)
-    many = sparse_pyramid_rendered(spark, hist, Z,
+                                  min_resolution=0, phase_depth=16)
+    many = sparse_pyramid_rendered(spark, hist, 6,
                                    PngRenderer(compression=1),
-                                   min_resolution=0, phase_depth=2,
-                                   apex_level=2)
+                                   min_resolution=0, phase_depth=2)
     for a, b in zip(one, many):
-        ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in a.collect())
-        rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in b.collect())
-        assert ra == rb
+        assert _rows(a) == _rows(b)
 
 
 def test_canon_paths_identical(spark, hist):
@@ -85,33 +86,25 @@ def test_canon_paths_identical(spark, hist):
                                 PngRenderer(compression=1),
                                 min_resolution=0, broadcast_canon=False)
     for da, db in zip(a, b):
-        ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in da.collect())
-        rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                          else v for v in row) for row in db.collect())
-        assert ra == rb
+        assert _rows(da) == _rows(db)
 
 
-def test_canon_auto_select_falls_back_under_tiny_threshold(spark,
-                                                           hist):
-    # force the auto estimator over the broadcast limit: it must take
-    # the min_by aggregate (the at-scale plan) and match the
-    # broadcast output exactly
+def test_canon_auto_select_falls_back_under_tiny_threshold(
+        spark, hist, monkeypatch):
+    # shrink the shared canon cap so even one canon row exceeds it:
+    # auto must take the min_by aggregate (the at-scale plan) and
+    # match the broadcast output exactly
     want_imgs, _ = sparse_pyramid_rendered(
         spark, hist, Z, PngRenderer(compression=1), min_resolution=0,
         broadcast_canon=True)
-    want = {r["tile_hex"] for r in want_imgs.collect()}
-    conf = spark.conf
-    old = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-    try:
-        auto_imgs, _ = sparse_pyramid_rendered(
-            spark, hist, Z, PngRenderer(compression=1),
-            min_resolution=0)
-        got = {r["tile_hex"] for r in auto_imgs.collect()}
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert got == want
+    assert "min_by" not in want_imgs._jdf.queryExecution().analyzed(
+        ).toString()
+    monkeypatch.setattr(pyramid, "_CANON_BC_CAP", 64)
+    auto_imgs, _ = sparse_pyramid_rendered(
+        spark, hist, Z, PngRenderer(compression=1), min_resolution=0)
+    assert "min_by" in auto_imgs._jdf.queryExecution().analyzed(
+        ).toString()
+    assert _rows(auto_imgs) == _rows(want_imgs)
 
 
 def test_canon_auto_select_small_broadcasts(spark, hist):
@@ -119,6 +112,8 @@ def test_canon_auto_select_small_broadcasts(spark, hist):
     # pick the broadcast plan and match the forced-broadcast output
     auto_imgs, _ = sparse_pyramid_rendered(
         spark, hist, Z, PngRenderer(compression=1), min_resolution=0)
+    assert "min_by" not in auto_imgs._jdf.queryExecution().analyzed(
+        ).toString()
     forced_imgs, _ = sparse_pyramid_rendered(
         spark, hist, Z, PngRenderer(compression=1), min_resolution=0,
         broadcast_canon=True)
@@ -126,37 +121,71 @@ def test_canon_auto_select_small_broadcasts(spark, hist):
             == {r["tile_hex"] for r in forced_imgs.collect()})
 
 
-def test_downsample_pixels_box_semantics(spark):
+def _shrink_rows(rows):
+    gx, gy, *ch = (np.array(c, dtype=np.int64) for c in zip(*rows))
+    px, py, out = _shrink_sparse(gx, gy, ch)
+    return [(int(x), int(y), *(int(c[i]) for c in out))
+            for i, (x, y) in enumerate(zip(px, py))]
+
+
+def test_shrink_sparse_box_semantics():
     # 4 children of one parent pixel with known alphas
-    rows = [(3, 10, 10, 255, 255, 255, 100),
-            (3, 11, 10, 255, 255, 255, 50),
-            (3, 10, 11, 255, 255, 255, 25),
-            (3, 11, 11, 255, 255, 255, 11)]
-    df = spark.createDataFrame(
-        rows, "z int, gx bigint, gy bigint, r int, g int, b int, a int")
-    out = downsample_pixels(df).collect()
+    out = _shrink_rows([(10, 10, 255, 255, 255, 100),
+                        (11, 10, 255, 255, 255, 50),
+                        (10, 11, 255, 255, 255, 25),
+                        (11, 11, 255, 255, 255, 11)])
     assert len(out) == 1
-    r = out[0]
-    assert (r["gx"], r["gy"]) == (5, 5)
-    assert r["a"] == (100 + 50 + 25 + 11 + 2) // 4
-    assert r["r"] == (255 * 4 + 2) // 4  # saturated white stays 255
+    gx, gy, r, _g, _b, a = out[0]
+    assert (gx, gy) == (5, 5)
+    assert a == (100 + 50 + 25 + 11 + 2) // 4
+    assert r == (255 * 4 + 2) // 4  # saturated white stays 255
 
     # partial parent: 1 lit child only -> other three contribute 0
-    df2 = spark.createDataFrame(
-        [(3, 20, 20, 255, 255, 255, 200)],
-        "z int, gx bigint, gy bigint, r int, g int, b int, a int")
-    r2 = downsample_pixels(df2).collect()[0]
-    assert r2["a"] == (200 + 2) // 4
-    assert r2["r"] == (255 + 2) // 4
+    (_, _, r2, _g, _b, a2), = _shrink_rows([(20, 20, 255, 255, 255, 200)])
+    assert a2 == (200 + 2) // 4
+    assert r2 == (255 + 2) // 4
 
 
-def test_sparse_levels_decay(spark, hist):
-    levels = sparse_levels(hist, Z, min_resolution=0)
-    counts = {z: levels[z].count() for z in levels}
-    # sparse row counts can only shrink (or stay) per level
-    for z in range(Z, 0, -1):
-        assert counts[z - 1] <= counts[z]
-    assert counts[0] >= 1
+def test_canonical_images_picks_min_zxy_owner(spark, monkeypatch):
+    """Every packed/struct x broadcast/min_by combination must return
+    the payload of the min-(z, x, y) tile per tile_id.  Owners carry
+    DIFFERENT payloads, with ties on z and on (z, x), so a wrong owner
+    or a mis-ordered key packing picks a wrong payload."""
+    rows = [  # (z, x, y, tile_id, payload)
+        (3, 0, 0, 1, b"z-larger"),
+        (2, 3, 0, 1, b"x-larger"),
+        (2, 1, 3, 1, b"y-larger"),
+        (2, 1, 2, 1, b"owner-1"),
+        (4, 9, 1, 2, b"owner-2"),
+        (5, 7, 7, 3, b"y-larger"),
+        (5, 7, 6, 3, b"owner-3"),
+        (5, 8, 0, 3, b"x-larger"),
+        (29, (1 << 29) - 1, 0, 4, b"x-larger"),
+        (29, 0, (1 << 29) - 1, 4, b"owner-4"),
+    ]
+    tiles = spark.createDataFrame(
+        [(z, x, y, tid, f"hex{tid}", bytearray(p))
+         for z, x, y, tid, p in rows],
+        "z int, x bigint, y bigint, tile_id bigint, tile_hex string, "
+        "payload binary")
+    want = [(t, bytes(f"owner-{t}", "ascii"), f"hex{t}")
+            for t in range(1, 5)]
+    for packed in (True, False):
+        for bc in (True, False):
+            got = canonical_images(tiles, "payload", packed=packed,
+                                   broadcast_canon=bc)
+            assert _rows(got.select("tile_id", "tile_data",
+                                    "tile_hex")) == want, (packed, bc)
+            plan = got._jdf.queryExecution().analyzed().toString()
+            assert ("min_by" in plan) == (not bc), (packed, bc)
+    # auto mode: broadcasts under the cap, min_by past it
+    for cap, uses_min_by in ((pyramid._CANON_BC_CAP, False), (64, True)):
+        monkeypatch.setattr(pyramid, "_CANON_BC_CAP", cap)
+        got = canonical_images(tiles, "payload", packed=True)
+        plan = got._jdf.queryExecution().analyzed().toString()
+        assert ("min_by" in plan) == uses_min_by
+        assert _rows(got.select("tile_id", "tile_data",
+                                "tile_hex")) == want
 
 
 def test_pixel_batch_conf_restores_unset_key(spark):
@@ -197,7 +226,7 @@ def test_min_resolution_final_phase_is_materialized(spark, hist):
     # executed plan of either output
     for df in (images, map_df):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" not in plan, plan[:2000]
+        assert "MapInPandas" not in plan, plan[:2000]
     got = {(r["zoom_level"], r["tile_column"], r["tile_row"],
             r["tile_id"]) for r in map_df.collect()}
     assert {z for z, *_ in got} == {5, 6}
